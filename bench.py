@@ -38,13 +38,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streaming_forex_data_pipeline_spark import plans
-from streaming_forex_data_pipeline_spark.session import get_spark
+from streaming_forex_data_pipeline_spark.session import codegen_counters, get_spark
 
 HEADLINE = [
     # relational
@@ -282,6 +283,22 @@ def calibration_probe(reps: int = 5) -> float:
     return round(times[len(times) // 2], 4)
 
 
+# tempfile.mkdtemp appends 8 characters drawn from [a-z0-9_] to the
+# scratch_dir prefix, which itself ends in "_"
+_MKDTEMP_SUFFIX = re.compile(r"_[a-z0-9_]{8}$")
+
+
+def _family(name: str) -> str:
+    """Family of a scratch-root entry: a content-addressed silver slot
+    is its prefix before the corpus path tag (so a slot named
+    ``ivf_baseline_root_...`` stays ``ivf_baseline``); a scratch_dir
+    (mkdtemp) directory is its name less the random suffix."""
+    for tag in ("_root_", "_tmp_"):
+        if tag in name:
+            return name.split(tag, 1)[0]
+    return _MKDTEMP_SUFFIX.sub("", name)
+
+
 def _simhash_fast(spark, sf_dir):
     """Bench-only variant: simhash_near_dups with the xxhash64 fast
     path (not registered — no DuckDB oracle exists for xxhash64, and
@@ -338,14 +355,6 @@ def main() -> None:
     except OSError:
         warm_silver_names = []
 
-    def _family(n: str) -> str:
-        # content-addressed slots: prefix before the corpus path tag;
-        # mkdtemp scratch dirs: strip the random 8-char suffix
-        import re
-
-        n = n.split("_root_", 1)[0].split("_tmp_", 1)[0]
-        return re.sub(r"_[a-z0-9_]{8}$", "", n)
-
     warm_families = sorted({_family(n) for n in warm_silver_names})
     spark = get_spark("sfdp-bench", cpus=cpus)
 
@@ -386,13 +395,28 @@ def main() -> None:
             )
         return wall - build_sec
 
-    for name in HEADLINE:  # warm-up sweep: JIT, code cache, silver table
-        run(name, "warmup")
+    # generated classes compiled per sweep: a repeated sweep whose
+    # plans hit the codegen cache compiles (almost) nothing
+    codegen: list[dict] = []
+
+    def sweep(phase: str, names, dir_: str | None = None, each=None) -> None:
+        c0, ms0 = codegen_counters(spark)
+        for name in names:
+            (each or run)(name, phase, dir_)
+        c1, ms1 = codegen_counters(spark)
+        codegen.append(
+            {"phase": phase, "classes": c1 - c0, "compile_ms": round(ms1 - ms0)}
+        )
+
     best: dict[str, float] = {}
+
+    def timed(name: str, phase: str, dir_: str | None) -> None:
+        t = run(name, phase, dir_)
+        best[name] = min(t, best.get(name, t))
+
+    sweep("warmup", HEADLINE)  # JIT, code cache, silver tables
     for _ in range(TIMED_SWEEPS):
-        for name in HEADLINE:
-            t = run(name, "timed")
-            best[name] = min(t, best.get(name, t))
+        sweep("timed", HEADLINE, each=timed)
     # slowest-decile third sweep: on this host, individual CPU-heavy
     # queries swing 2-4x between otherwise-identical quiet runs even
     # at min-of-2 (round-10 record: image_resize 15.7 s in one run,
@@ -401,8 +425,7 @@ def main() -> None:
     # outliers land in — the min-of-N-where-it-matters shape the
     # round-9 verdict suggested.
     decile = max(1, len(HEADLINE) // 10)
-    for name in sorted(best, key=best.get, reverse=True)[:decile]:
-        best[name] = min(best[name], run(name, "decile"))
+    sweep("decile", sorted(best, key=best.get, reverse=True)[:decile], each=timed)
     timings = {name: round(best[name], 3) for name in HEADLINE}
 
     # slow-lane coverage sweep (r11 verdict Next #5: 81 registered
@@ -424,15 +447,18 @@ def main() -> None:
     # sweeps (null timing + error string recorded instead)
     slow_lane: dict[str, object] = {}
     lane_errors: dict[str, str] = {}
-    for name in sorted(set(qs) - set(HEADLINE)):
+
+    def lane(name: str, phase: str, dir_: str | None) -> None:
         try:
             # lane numbers are EXEC-ONLY too: a cold sf0.01 silver
             # build logs itself into build_events with phase "lane"
             # instead of inflating whichever lane query hit it first
-            slow_lane[name] = round(run(name, "lane", lane_dir), 3)
+            slow_lane[name] = round(run(name, phase, dir_), 3)
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             slow_lane[name] = None
             lane_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+
+    sweep("lane", sorted(set(qs) - set(HEADLINE)), lane_dir, each=lane)
     never_timed = sorted(set(qs) - set(timings) - set(slow_lane))
 
     # The driver captures only the TAIL of stdout (~2000 chars) — the
@@ -476,6 +502,10 @@ def main() -> None:
         # above are exec-only (build seconds subtracted), so these
         # rows are where the one-time cost lives.
         "silver_builds": build_events,
+        # generated classes compiled and Janino compile time per sweep
+        # ({phase, classes, compile_ms}, in run order): the second
+        # timed sweep should compile close to nothing
+        "codegen": codegen,
         # on-disk silver slots that existed BEFORE this run (full
         # basenames; the one-line JSON carries the deduped families)
         "warm_silvers_at_start": warm_silver_names,

@@ -27,10 +27,7 @@ from .text import md5_fingerprint
 # that scales to a 100 TB node set.  The decision comes from a MEASURED
 # count of the actual label table, not an estimate, so it is
 # scale-adaptive rather than tuned to local[32]; raise it on clusters
-# with bigger executors via the env knob.
-_CC_BROADCAST_MAX_NODES = int(
-    os.environ.get("SFDP_CC_BROADCAST_MAX_NODES", str(2_000_000))
-)
+# with bigger executors via SFDP_CC_BROADCAST_MAX_NODES.
 
 # target rows per edge partition for the CC loop (two BIGINTs a row,
 # ~2M rows ~ 32 MB): the symmetric edge list inherits its partition
@@ -41,10 +38,15 @@ _CC_BROADCAST_MAX_NODES = int(
 # proportional to the data instead of the session default (guide
 # §2.1/§2.2: fixed cost per partition; the r14 scaling block showed
 # cross_modal_clusters FASTER on 8 cores than 32 for exactly this
-# reason).  coalesce() is narrow — no shuffle is added.
-_CC_EDGE_ROWS_PER_PARTITION = int(
-    os.environ.get("SFDP_CC_EDGE_ROWS_PER_PARTITION", str(2_000_000))
-)
+# reason).  coalesce() is narrow — no shuffle is added.  Override with
+# SFDP_CC_EDGE_ROWS_PER_PARTITION.
+
+
+def _cc_knob(name: str) -> int:
+    """Both CC scale knobs default to 2M and, like SFDP_PIN_FIT_MAX_ROWS,
+    are read on every call, so a changed environment takes effect
+    without a re-import."""
+    return int(os.environ.get(name, str(2_000_000)))
 
 
 def exact_duplicate_groups(docs: DataFrame, text: str = "text") -> DataFrame:
@@ -629,11 +631,12 @@ def connected_components(
     n_sym_edges = edges.count()  # cached RDD after the count above
     npart = edges.rdd.getNumPartitions()
     target = max(
-        1, math.ceil(n_sym_edges / _CC_EDGE_ROWS_PER_PARTITION)
+        1,
+        math.ceil(n_sym_edges / _cc_knob("SFDP_CC_EDGE_ROWS_PER_PARTITION")),
     )
     if target < npart:
         edges = edges.coalesce(target)  # narrow: merges cached blocks
-    small = n_nodes <= _CC_BROADCAST_MAX_NODES
+    small = n_nodes <= _cc_knob("SFDP_CC_BROADCAST_MAX_NODES")
     bc = F.broadcast if small else (lambda f: f)
 
     def tagged_sums(before: DataFrame, after: DataFrame):
@@ -1536,7 +1539,7 @@ def cross_modal_clusters(
     # itself does (r15, guide §3.1 — measured size, not estimate)
     bc = (
         F.broadcast
-        if comp.count() <= _CC_BROADCAST_MAX_NODES
+        if comp.count() <= _cc_knob("SFDP_CC_BROADCAST_MAX_NODES")
         else (lambda f: f)
     )
     members = bc(comp).join(

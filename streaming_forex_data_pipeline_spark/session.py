@@ -14,6 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-code cache (a JVM-wide LRU of compiled Janino
+# classes, keyed by source text) defaults to 100 entries.  One pass over
+# all 262 registered queries at sf0.01 compiles 3544 distinct classes (a
+# second pass adds 154); one benchmark batch_mix pass compiles about 300.
+# An LRU cache swept by a repeating cycle larger than itself evicts every
+# entry before its next use, so at 100 entries every repeated query
+# recompiled its whole plan and ran the fresh bytecode interpreted until
+# the JIT caught up.  About 2x the measured registry working set keeps
+# repeated plans on cached classes; the cache is static, read once per JVM.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def get_spark(app_name: str = "sfdp-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -35,7 +46,25 @@ def get_spark(app_name: str = "sfdp-spark", cpus: int | None = None) -> SparkSes
         # microsecond TimestampType in the loader (truncation —
         # identical to DuckDB's CAST(ts_ns AS TIMESTAMP)).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """JVM-wide whole-stage/expression codegen totals since JVM start:
+    ``(classes_compiled, compile_ms)``.  Cache hits compile nothing, so
+    the difference across a call is what that call compiled.
+
+    The class count is the sample count of Spark's
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` histogram (one sample per
+    compiled class).  That histogram keeps only a decaying sample of the
+    durations, not their sum, so the time is the exact nanosecond total
+    ``CodeGenerator`` accumulates over the same compilations.
+    """
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return int(hist.getCount()), gen.compileTime() / 1e6

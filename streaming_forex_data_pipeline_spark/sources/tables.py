@@ -17,6 +17,8 @@ partition pruning applies unchanged.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,32 +46,36 @@ ROUND = 6
 # import this package.  When the driver process runs from a different
 # cwd (the correctness harness does), workers would fail with
 # ModuleNotFoundError, so ship the package source as a zip via
-# addPyFile once per application.
+# addPyFile once per application.  The check-and-ship runs under a lock:
+# two threads making an application's first load_table call would
+# otherwise both write the zip and both call addPyFile.
 _SHIPPED: set[str] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def _ship_package(spark: SparkSession) -> None:
     app = spark.sparkContext.applicationId
-    if app in _SHIPPED:
-        return
-    import os
-    import tempfile
-    import zipfile
+    with _SHIP_LOCK:
+        if app in _SHIPPED:
+            return
+        import os
+        import tempfile
+        import zipfile
 
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"sfdp_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(app)
+        pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zpath = os.path.join(
+            tempfile.gettempdir(), f"sfdp_spark_pkg_{os.getpid()}.zip"
+        )
+        if not os.path.exists(zpath):
+            with zipfile.ZipFile(zpath, "w") as z:
+                for dirpath, _dirs, files in os.walk(pkg_dir):
+                    for fn in files:
+                        if fn.endswith(".py"):
+                            full = os.path.join(dirpath, fn)
+                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                            z.write(full, rel)
+        spark.sparkContext.addPyFile(zpath)
+        _SHIPPED.add(app)
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
