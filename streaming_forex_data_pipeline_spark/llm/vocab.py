@@ -611,8 +611,10 @@ def hll_registers(items: DataFrame, col: str = "item", p: int = HLL_P) -> DataFr
         .groupBy("bucket")
         .agg(F.max("rho").alias("max_rho"))
     )
+    # one partition: 2^p rows are one task's work, and a streaming
+    # channel commits one parquet file per partition of the result
     spine = (
-        items.sparkSession.range(m)
+        items.sparkSession.range(0, m, 1, 1)
         .select(F.col("id").cast("long").alias("bucket"))
     )
     return spine.join(touched, "bucket", "left").select(

@@ -25,6 +25,22 @@ from pyspark.sql import SparkSession
 # repeated plans on cached classes; the cache is static, read once per JVM.
 CODEGEN_CACHE_ENTRIES = 8192
 
+# Streaming checkpoint files (offset, commit and source logs, state-store
+# deltas) are written through this CheckpointFileManager.  Spark's default
+# FileContext manager renames through AbstractFileSystem, which on Hadoop's
+# local file system without its native library forks `readlink` for every
+# file and its .crc (63 forks per micro-batch in the stream_ingest
+# benchmark).  On a local POSIX file system both managers do an
+# exists-check and then rename(2), so the atomicity and the errors a writer
+# that lost the race sees are the same; the FileContext path only adds the
+# fork.  This is the local profile: cluster deployments with object-store
+# checkpoints keep Spark's default.  State-store checksum verification
+# (spark.sql.streaming.checkpoint.fileChecksum.enabled) stays on.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(app_name: str = "sfdp-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -47,6 +63,7 @@ def get_spark(app_name: str = "sfdp-spark", cpus: int | None = None) -> SparkSes
         # identical to DuckDB's CAST(ts_ns AS TIMESTAMP)).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def upsert_append(
@@ -99,13 +100,11 @@ def commit_append(
         "staged": os.path.basename(staged),
         "files": files,
         "version": version,
+        # the writer knows its schema: recording it lets read_committed
+        # declare the scan's schema instead of running a job to read
+        # parquet footers
+        "schema": json.loads(stamped.schema.json()),
     }
-    if "__orig_cid" in stamped.columns:
-        # compacted rows carry their ORIGINAL commit id as a secondary
-        # tie-break column; flagging it in the manifest lets
-        # read_committed turn on parquet schema merging only for
-        # tables that actually contain the extra column
-        manifest["orig_cid"] = True
     if replaces:
         # compaction commit: this manifest logically SUBSUMES the
         # listed earlier commits — readers skip them from the moment
@@ -176,6 +175,35 @@ def log_has_version(sink_dir: str, version: float) -> bool:
     return version in log_versions(sink_dir)
 
 
+def _union_schema(schemas: list[dict]) -> StructType:
+    """The union of manifest schemas (``StructType.jsonValue()`` form),
+    fields in first-seen order and every field, element and map value
+    nullable — what a merged parquet scan reports.  A field two commits
+    declare with different types raises ``ValueError``."""
+
+    def nullable(node):
+        if isinstance(node, list):
+            return [nullable(n) for n in node]
+        if not isinstance(node, dict):
+            return node
+        out = {k: nullable(v) for k, v in node.items()}
+        for k in ("nullable", "containsNull", "valueContainsNull"):
+            if k in out:
+                out[k] = True
+        return out
+
+    fields: dict[str, dict] = {}
+    for schema in schemas:
+        for field in nullable(schema)["fields"]:
+            seen = fields.setdefault(field["name"], field)
+            if seen["type"] != field["type"]:
+                raise ValueError(
+                    f"commits disagree on the type of {field['name']!r}: "
+                    f"{seen['type']} vs {field['type']}"
+                )
+    return StructType.fromJson({"type": "struct", "fields": list(fields.values())})
+
+
 def read_committed(
     spark: SparkSession, table_dir: str, keys: list[str],
     as_of: int | None = None,
@@ -200,7 +228,11 @@ def read_committed(
 
     One parquet scan over all committed files; the file -> commit-id
     map rides a broadcast join keyed on the (globally unique) parquet
-    part-file basename via input_file_name()."""
+    part-file basename via input_file_name().  The scan's schema is the
+    union of the schemas the manifests record, so building the frame
+    reads no footer; it launches no Spark job while the scan lists at
+    most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) files, above which Spark lists them in a job."""
     import json
     import os
 
@@ -221,23 +253,26 @@ def read_committed(
     replaced = set()
     for m in manifests.values():
         replaced.update(m.get("replaces", ()))
-    any_orig_cid = False
+    schemas = []
     for cid, m in manifests.items():
-        if cid in replaced:
+        if cid in replaced or not m["files"]:
             continue
-        any_orig_cid = any_orig_cid or bool(m.get("orig_cid"))
+        schemas.append(m.get("schema"))
         for f in m["files"]:
             rows.append(
                 (f, cid, os.path.join(table_dir, "_staged", m["staged"], f))
             )
     if not rows:
         raise FileNotFoundError(f"no commits in {log_dir}")
-    reader = spark.read
-    if any_orig_cid:
-        # a compaction commit in scope carries the folded rows'
-        # ORIGINAL commit ids as a data column the retained commits
-        # lack — merge footers so the column survives the union scan
-        reader = reader.option("mergeSchema", "true")
+    if all(schemas):
+        # the union of the writers' schemas — a compaction commit adds
+        # __orig_cid, which reads as null from the retained commits — so
+        # the scan is planned without touching a footer
+        reader = spark.read.schema(_union_schema(schemas))
+    else:
+        # a manifest from before schemas were recorded: infer, merging
+        # footers so a compaction commit's __orig_cid survives the union
+        reader = spark.read.option("mergeSchema", "true")
     df = reader.parquet(*[p for _, _, p in rows])
     fmap = spark.createDataFrame(
         [(f, cid) for f, cid, _ in rows], ["__file", "__cid"]

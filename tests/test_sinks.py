@@ -706,3 +706,113 @@ def test_maintenance_entry_point(spark, tmp_path, monkeypatch):
     # the wedged sink errored in isolation; the healthy one (listed
     # AFTER it) was still maintained
     assert wedged in rep["errors"]
+
+
+def _jobs_while(spark, fn):
+    """Spark job ids launched on this thread while ``fn`` runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched while building a frame")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_committed_plans_without_a_job(spark, tmp_path):
+    """Building the committed view declares the manifests' schema, so it
+    reads no parquet footer and launches no Spark job — on a plain log
+    and on one holding a compaction commit whose rows carry
+    ``__orig_cid``."""
+    d = str(tmp_path / "tbl")
+    for b in range(3):
+        S.commit_append(
+            spark.createDataFrame([(b, f"v{b}"), (9, f"v{b}")], "k long, v string"),
+            d, version=1.0,
+        )
+    assert _jobs_while(spark, lambda: S.read_committed(spark, d, ["k"])) == []
+
+    assert S.compact_log(spark, d, keys=["k"], keep_last=1) is not None
+    built = {}
+    jobs = _jobs_while(
+        spark,
+        lambda: built.update(
+            view=S.read_committed(spark, d, ["k"]),
+            meta=S.read_committed(spark, d, ["k"], keep_meta=True),
+        ),
+    )
+    assert jobs == []
+    assert "__orig_cid" in built["meta"].columns
+    got = {(r["k"], r["v"]) for r in built["view"].collect()}
+    assert got == {(0, "v0"), (1, "v1"), (2, "v2"), (9, "v2")}
+
+
+def _legacy_commit(spark, df, table_dir: str, cid: int, version: float) -> None:
+    """A commit as written before manifests recorded their schema."""
+    import json
+    import os
+
+    staged = f"legacy{cid}"
+    path = os.path.join(table_dir, "_staged", staged)
+    df.withColumn("__ingest_ts", F.lit(version)).write.parquet(path)
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    os.makedirs(os.path.join(table_dir, "_log"), exist_ok=True)
+    with open(os.path.join(table_dir, "_log", f"{cid:020d}.json"), "w") as fh:
+        json.dump({"staged": staged, "files": files, "version": version}, fh)
+
+
+def test_read_committed_legacy_manifest_matches_declared_schema(spark, tmp_path):
+    """A log whose first manifest has no ``schema`` key (written before
+    schemas were recorded) reads — plain, as of a commit, and through
+    compact_log — exactly like the same log written by commit_append:
+    same rows and the same schema, i.e. the declared union schema is the
+    one footer inference reports (every field nullable)."""
+    batches = [
+        [(1, "a"), (2, "b")],
+        [(2, "c"), (3, "d")],
+        [(1, "e")],
+        [(4, "f")],
+    ]
+
+    def frame(b):
+        # a non-nullable column, and array elements that are non-nullable
+        # in odd commits only: the union must relax both
+        second = F.lit(2) if b % 2 else F.col("k").cast("int") * 0 + 2
+        return spark.createDataFrame(batches[b], "k long, v string").withColumn(
+            "arr", F.array(F.lit(1), second)
+        ).withColumn("one", F.lit(1))
+
+    legacy, declared = str(tmp_path / "legacy"), str(tmp_path / "declared")
+    _legacy_commit(spark, frame(0), legacy, 1, 0.0)
+    for b in range(len(batches)):
+        if b:
+            S.commit_append(frame(b), legacy, version=float(b))
+        S.commit_append(frame(b), declared, version=float(b))
+
+    def snap(table_dir, as_of=None):
+        df = S.read_committed(spark, table_dir, ["k"], as_of=as_of)
+        rows = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+        return df.schema, rows
+
+    for as_of in (None, 1, 2, 3):
+        assert snap(legacy, as_of) == snap(declared, as_of), as_of
+    assert snap(legacy)[0]["arr"].dataType.containsNull
+
+    cids = [S.compact_log(spark, t, keys=["k"], keep_last=1) for t in (legacy, declared)]
+    assert cids[0] == cids[1] is not None
+    for as_of in (None, 3, cids[0]):
+        assert snap(legacy, as_of) == snap(declared, as_of), as_of
+
+
+def test_read_committed_rejects_commits_with_conflicting_types(spark, tmp_path):
+    d = str(tmp_path / "tbl")
+    S.commit_append(spark.createDataFrame([(1, "a")], "k long, v string"), d, version=1.0)
+    S.commit_append(spark.createDataFrame([(2, 3)], "k long, v int"), d, version=2.0)
+    import pytest
+
+    with pytest.raises(ValueError, match="'v'"):
+        S.read_committed(spark, d, ["k"])

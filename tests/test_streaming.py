@@ -51,6 +51,112 @@ def test_candle_channel_matches_batch_resample(spark, sf_dir):
     assert (merged["n_events_s"] == merged["n_events_b"]).all()
 
 
+def test_candle_channel_restarts_from_checkpoint(spark, sf_dir, tmp_path):
+    """Stop the stateful, watermarked candle channel after two files,
+    add a third and restart it from the same checkpoint: the restarted
+    query reads only the new file, resumes the open windows from the
+    restored (checksum-verified) state store, and every window the two
+    runs emit equals the batch resample's window, exactly once."""
+    import os
+
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    ) == "true"
+    pin_portability_confs(spark)
+    events = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    # cut event time inside hour windows that hold two events of one
+    # symbol, so each window straddles two files: the one at the second
+    # cut can only come out right if the restart restored its state
+    hour = F.date_trunc("hour", "ts")
+    split = (
+        events.groupBy("event_type", hour.alias("h"))
+        .agg(F.min("ts").alias("first"), F.max("ts").alias("last"))
+        .filter(F.col("first") < F.col("last"))
+        .orderBy("h")
+        .withColumn("hs", F.date_format("h", "yyyy-MM-dd HH:mm:ss"))
+        .collect()
+    )
+    cuts = [split[len(split) // 3], split[2 * len(split) // 3]]
+    assert cuts[0]["h"] < cuts[1]["h"]
+    bounds = [None, cuts[0]["last"], cuts[1]["last"], None]
+
+    src, staging = tmp_path / "events_src", tmp_path / "events_parts"
+    src.mkdir()
+    parts, sizes = [], []
+    for i in range(3):
+        part = events
+        if bounds[i] is not None:
+            part = part.filter(F.col("ts") >= bounds[i])
+        if bounds[i + 1] is not None:
+            part = part.filter(F.col("ts") < bounds[i + 1])
+        part.coalesce(1).write.parquet(str(staging / str(i)))
+        (name,) = [
+            f for f in os.listdir(staging / str(i)) if f.endswith(".parquet")
+        ]
+        parts.append(staging / str(i) / name)
+        sizes.append(part.count())
+
+    def arrive(i):
+        # the file source takes files in modification-time order
+        dst = src / f"events_{i}.parquet"
+        os.link(parts[i], dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    out, ckpt = str(tmp_path / "candles_out"), str(tmp_path / "candles_ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = (
+            CH.candle_channel(stream)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+        return q.recentProgress
+
+    arrive(0)
+    arrive(1)
+    first = run()
+    arrive(2)
+    second = run()
+    assert sum(p["numInputRows"] for p in first) == sizes[0] + sizes[1]
+    assert sum(p["numInputRows"] for p in second) == sizes[2]
+    assert min(p["batchId"] for p in second) > max(p["batchId"] for p in first)
+    # every state-store delta the restart restored from carries the
+    # Spark checksum file it was verified against
+    deltas = [
+        os.path.join(dp, f)
+        for dp, _, fs in os.walk(os.path.join(ckpt, "state"))
+        for f in fs
+        if f.endswith(".delta")
+    ]
+    assert deltas and all(os.path.exists(d + ".crc") for d in deltas)
+
+    got = spark.read.parquet(out).toPandas()
+    batch = candles_from_events(spark, sf_dir).toPandas()
+    keys = ["symbol", "ts"]
+    assert not got.duplicated(keys).any(), "a window was emitted twice"
+    merged = got.merge(batch, on=keys, suffixes=("_s", "_b"))
+    assert len(merged) == len(got), "stream emitted a window absent from batch"
+    assert len(got) >= len(batch) - 2 * batch["symbol"].nunique()
+    for c in ["open", "high", "low", "close", "volume"]:
+        assert (merged[f"{c}_s"] - merged[f"{c}_b"]).abs().max() <= 1e-9, c
+    assert (merged["n_events_s"] == merged["n_events_b"]).all()
+    hours = merged["ts"].dt.strftime("%Y-%m-%d %H:%M:%S")
+    for cut in cuts:
+        w = merged[(merged["symbol"] == cut["event_type"]) & (hours == cut["hs"])]
+        assert len(w) == 1 and w["n_events_s"].iloc[0] >= 2, cut
+
+
 def test_streaming_dedup_drops_duplicate_event_ids(spark, sf_dir, tmp_path):
     # duplicate the events file in a staging dir: same event_ids twice;
     # dropDuplicatesWithinWatermark on event_id must collapse them back
@@ -406,6 +512,7 @@ def test_hll_channel_merges_across_microbatches(spark, sf_dir, tmp_path):
     """Per-batch HLL register files max-merged through the commit log
     must equal the batch register file over the whole table, and fold
     to the identical cardinality estimate."""
+    import json
     import os
 
     from streaming_forex_data_pipeline_spark.llm import vocab as VO
@@ -421,7 +528,13 @@ def test_hll_channel_merges_across_microbatches(spark, sf_dir, tmp_path):
         stream=stream,
     )
     q.awaitTermination(180)
-    assert len(os.listdir(os.path.join(sink_dir, "_log"))) >= 2
+    log_dir = os.path.join(sink_dir, "_log")
+    assert len(os.listdir(log_dir)) >= 2
+    # the 2^p-row register file is one task's output: one parquet file
+    # (and one .crc) per commit, not one per default-parallelism slice
+    for f in os.listdir(log_dir):
+        with open(os.path.join(log_dir, f)) as fh:
+            assert len(json.load(fh)["files"]) == 1, f
     merged = spark.table("hll_parity")
     got = {(r["bucket"]): r["max_rho"] for r in merged.collect()}
     items = d.select(F.explode(words_array("text")).alias("item"))
