@@ -18,6 +18,11 @@ All set-based: the reference's N-round-trips-per-batch loop disappears.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -65,10 +70,6 @@ def commit_append(
     Scale shape: the commit is O(1) metadata (one manifest listing the
     batch's files) regardless of batch size; readers pay one scan over
     the union of committed files.  Returns the commit id."""
-    import json
-    import os
-    import uuid
-
     if stamp_from_column:
         # compaction path: rows already carry their original
         # __ingest_ts — keep them so keep-latest ordering vs retained
@@ -129,8 +130,6 @@ def commit_append(
 
 
 def _commit_ids(log_dir: str) -> list[int]:
-    import os
-
     if not os.path.isdir(log_dir):
         return []
     return sorted(
@@ -140,6 +139,31 @@ def _commit_ids(log_dir: str) -> list[int]:
     )
 
 
+def _manifests(log_dir: str, as_of: int | None = None) -> dict[int, dict]:
+    """Every manifest in the log (up to commit ``as_of``), by commit id."""
+    out = {}
+    for cid in _commit_ids(log_dir):
+        if as_of is not None and cid > as_of:
+            break
+        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
+            out[cid] = json.load(fh)
+    return out
+
+
+def _live(manifests: dict[int, dict]) -> dict[int, dict]:
+    """The manifests no manifest in scope ``replaces`` (see
+    compact_log): the commits a reader scans."""
+    replaced = {c for m in manifests.values() for c in m.get("replaces", ())}
+    return {c: m for c, m in manifests.items() if c not in replaced}
+
+
+def live_file_count(table_dir: str) -> int:
+    """How many parquet files a `read_committed` of the whole log
+    scans — O(#commits) manifest reads, no Spark job."""
+    live = _live(_manifests(os.path.join(table_dir, "_log")))
+    return sum(len(m["files"]) for m in live.values())
+
+
 def log_versions(sink_dir: str) -> list[float]:
     """All manifest ``version`` stamps in a table's commit log —
     O(#commits) driver-side metadata reads, no Spark job.  The batch
@@ -147,21 +171,8 @@ def log_versions(sink_dir: str) -> list[float]:
     micro-batch commits version=float(batch_id)), so layout rebuilds
     list published batches from here instead of running a
     data-sized distinct over the committed rows (review-found)."""
-    import json
-    import os
-
-    log_dir = os.path.join(sink_dir, "_log")
-    if not os.path.isdir(log_dir):
-        return []
-    out = []
-    for f in sorted(os.listdir(log_dir)):
-        if not f.endswith(".json") or f.startswith("."):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            v = json.load(fh).get("version")
-        if v is not None:
-            out.append(v)
-    return out
+    manifests = _manifests(os.path.join(sink_dir, "_log"))
+    return [m["version"] for m in manifests.values() if m.get("version") is not None]
 
 
 def log_has_version(sink_dir: str, version: float) -> bool:
@@ -232,36 +243,22 @@ def read_committed(
     union of the schemas the manifests record, so building the frame
     reads no footer; it launches no Spark job while the scan lists at
     most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-    (32) files, above which Spark lists them in a job."""
-    import json
-    import os
-
+    (32) files, above which Spark lists them in a job.  The merge
+    channels (`streaming.channels.start_merge_channel`) fold their log
+    before it reaches that many files."""
     log_dir = os.path.join(table_dir, "_log")
-    rows = []
-    cids = _commit_ids(log_dir)
-    if as_of is not None:
-        cids = [c for c in cids if c <= as_of]
-    manifests = {}
-    for cid in cids:
-        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
-            manifests[cid] = json.load(fh)
     # compaction: a manifest's "replaces" list names earlier commits it
     # logically subsumes — skip them (their files may or may not still
     # exist; GC is lazy).  Computed WITHIN the as_of scope, so time
     # travel to a pre-compaction snapshot still reads the original
     # commits until compact_log's GC physically reclaims them.
-    replaced = set()
-    for m in manifests.values():
-        replaced.update(m.get("replaces", ()))
-    schemas = []
-    for cid, m in manifests.items():
-        if cid in replaced or not m["files"]:
-            continue
-        schemas.append(m.get("schema"))
-        for f in m["files"]:
-            rows.append(
-                (f, cid, os.path.join(table_dir, "_staged", m["staged"], f))
-            )
+    live = {c: m for c, m in _live(_manifests(log_dir, as_of)).items() if m["files"]}
+    schemas = [m.get("schema") for m in live.values()]
+    rows = [
+        (f, cid, os.path.join(table_dir, "_staged", m["staged"], f))
+        for cid, m in live.items()
+        for f in m["files"]
+    ]
     if not rows:
         raise FileNotFoundError(f"no commits in {log_dir}")
     if all(schemas):
@@ -332,29 +329,17 @@ def compact_log(
     reclaims it), a crash after leaves stale-but-ignored manifests
     that this function garbage-collects on its next run.  Returns the
     compaction commit id, or None if there was nothing to fold."""
-    import json
-    import os
-    import shutil
-
     log_dir = os.path.join(table_dir, "_log")
-    cids = _commit_ids(log_dir)
+    manifests = _manifests(log_dir)
+    live = sorted(_live(manifests))
     # GC debris from earlier compactions: manifests some surviving
     # manifest replaces, plus their staged dirs
-    replaced_now = set()
-    manifests = {}
-    for cid in cids:
-        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
-            manifests[cid] = json.load(fh)
-        replaced_now.update(manifests[cid].get("replaces", ()))
-    for cid in sorted(replaced_now):
-        if cid in manifests:
-            staged = manifests[cid]["staged"]
-            os.unlink(os.path.join(log_dir, f"{cid:020d}.json"))
-            shutil.rmtree(
-                os.path.join(table_dir, "_staged", staged),
-                ignore_errors=True,
-            )
-    live = [c for c in cids if c not in replaced_now]
+    for cid in sorted(manifests.keys() - set(live)):
+        os.unlink(os.path.join(log_dir, f"{cid:020d}.json"))
+        shutil.rmtree(
+            os.path.join(table_dir, "_staged", manifests[cid]["staged"]),
+            ignore_errors=True,
+        )
     if len(live) <= keep_last + 1:
         return None  # nothing worth folding
     fold = live[:-keep_last] if keep_last > 0 else live
@@ -403,15 +388,8 @@ def vacuum(table_dir: str) -> list[str]:
     """Reclaim staging directories no manifest references — the debris
     of writers that crashed between staging and publishing.  Never
     touches committed data; returns the removed paths."""
-    import json
-    import os
-    import shutil
-
-    log_dir = os.path.join(table_dir, "_log")
-    referenced = set()
-    for cid in _commit_ids(log_dir):
-        with open(os.path.join(log_dir, f"{cid:020d}.json")) as fh:
-            referenced.add(json.load(fh)["staged"])
+    manifests = _manifests(os.path.join(table_dir, "_log"))
+    referenced = {m["staged"] for m in manifests.values()}
     staged_root = os.path.join(table_dir, "_staged")
     removed = []
     if os.path.isdir(staged_root):
@@ -441,8 +419,6 @@ def read_upserted(
 def compact(spark: SparkSession, table_dir: str, keys: list[str]) -> None:
     """S12-style maintenance: rewrite the table with upsert conflicts
     resolved so reads stop paying the dedup window."""
-    import shutil
-
     resolved = read_upserted(spark, table_dir, keys)
     tmp = table_dir.rstrip("/") + ".compact"
     resolved.write.mode("overwrite").parquet(tmp)
@@ -474,7 +450,6 @@ def _partition_dirs(table_dir: str) -> list[tuple]:
     """(date, path) for each Hive ``p_date=`` partition directory;
     empty list means the table is unpartitioned."""
     import datetime
-    import os
 
     out = []
     if os.path.isdir(table_dir):
@@ -518,7 +493,6 @@ def delete_range(
     O(table).  On an unpartitioned table it falls back to the
     overwrite-excluding rewrite."""
     import datetime
-    import shutil
 
     parts = _partition_dirs(table_dir)
     if not parts:
@@ -552,8 +526,6 @@ def delete_range(
         kept = spark.read.parquet(path).filter(
             ~((F.col(ts_col) >= start) & (F.col(ts_col) <= end))
         )
-        import os
-
         tmp = os.path.join(
             table_dir, "." + os.path.basename(path.rstrip("/")) + ".del"
         )
@@ -623,8 +595,6 @@ def export_shards(
     into one task and each shard directory gets one file per writing
     task, not one per (task x shard).
     """
-    import json as _json
-    import os
 
     from ..llm.corpus import portable_bucket
 
@@ -657,7 +627,7 @@ def export_shards(
     final = os.path.join(out_dir, "_manifest.json")
     tmp = final + ".tmp"
     with open(tmp, "w") as fh:
-        _json.dump({"n_shards": n_shards, "rows": rows}, fh, sort_keys=True)
+        json.dump({"n_shards": n_shards, "rows": rows}, fh, sort_keys=True)
     os.replace(tmp, final)
     return manifest
 
@@ -677,9 +647,6 @@ def export_shards_jsonl(
     Spark's native json writer does the row -> JSONL encoding
     JVM-side (no Python in the path); readers get schema-on-read via
     ``spark.read.json`` or any line-oriented loader."""
-    import json as _json
-    import os
-    import uuid
 
     from ..llm.corpus import portable_bucket
 
@@ -706,7 +673,7 @@ def export_shards_jsonl(
     final = os.path.join(out_dir, "_manifest.json")
     tmp = os.path.join(out_dir, f".manifest-{uuid.uuid4().hex}")
     with open(tmp, "w") as fh:
-        _json.dump({"shards": rows, "format": "jsonl"}, fh, sort_keys=True)
+        json.dump({"shards": rows, "format": "jsonl"}, fh, sort_keys=True)
     os.replace(tmp, final)
     return spark.createDataFrame(
         sorted(rows.items()), "shard int, n_rows long"

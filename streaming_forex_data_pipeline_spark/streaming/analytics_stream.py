@@ -1,12 +1,14 @@
 """Streaming faces of the event-analytics queries (`plans/olap_q.py`).
 
-Same state contract as the sketch channels in `corpus_stream.py`
-(CMS = SUM, HLL = MAX, reservoir = top-k): each micro-batch commits a
-bounded DELTA through the transactional log (`sources/sinks.py:
-commit_append`), the live readout is a lazy view aggregating the log
-by the face's merge law, the driver holds O(1) state, and crashed
-micro-batch replays dedup idempotently against their (key, batch)
-identity.
+The cohort and WAU faces are merge channels
+(`channels.start_merge_channel`, like the sketch channels in
+`corpus_stream.py`: CMS = SUM, HLL = MAX, reservoir = top-k): each
+micro-batch commits a bounded DELTA through the transactional log, the
+live readout is a lazy view merging the log by the face's law, and the
+same law folds settled commits, so the view reads at most
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` deltas, not
+one per batch.  Crashed micro-batch replays dedup against their (key,
+batch) identity.
 
 The cohort face's merge law is **MIN**: a user's first-event timestamp
 over a union of batches is the min of per-batch minima — so per-user
@@ -16,6 +18,15 @@ and the weekly cohort sizes derived from them equal the batch answer
 """
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from .channels import merge_law, start_merge_channel
+
+
+#: cohort merge law: a user's first-event time over a union of batches
+#: is the min of the per-batch minima
+COHORT_LAW = merge_law(F.min, ["user_id"], ["first_ts"])
 
 
 def start_cohort_channel(
@@ -28,59 +39,31 @@ def start_cohort_channel(
     """Continuously maintained weekly signup-cohort sizes over an
     events stream: each micro-batch commits its per-user min event
     timestamp keyed (user_id, batch); the live view folds the log by
-    per-user MIN, truncates to ISO week, and counts users per cohort
-    — `plans/olap_q.py:cohort_retention`'s cohort dimension, kept
-    fresh without rescanning history (parity across real micro-batches
-    proven in tests/test_streaming.py).
+    per-user MIN (``COHORT_LAW``), truncates to ISO week, and counts
+    users per cohort — `plans/olap_q.py:cohort_retention`'s cohort
+    dimension, kept fresh without rescanning history (parity across
+    real micro-batches proven in tests/test_streaming.py).
 
-    Scale shape: delta rows are bounded by users-per-batch, sink state
-    by users x batches before `compact_log` folds settled commits, the
-    view's aggregation is users-keyed, and the cohort readout is
+    Scale shape: delta rows are bounded by users-per-batch, the
+    folded log by users (never by batches), and the cohort readout is
     calendar-bounded.  The driver never holds per-user state."""
-    from pyspark.sql import functions as F
 
-    from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
-
-    if sink_dir is None:
-        sink_dir = scratch_dir("cohort_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
-    spark.createDataFrame(
-        [], "cohort timestamp, n_cohort long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = (
-            batch_df.groupBy("user_id")
-            .agg(F.min("ts").alias("first_ts"))
-            .withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["user_id", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        (
-            committed.groupBy("user_id")
-            .agg(F.min("first_ts").alias("first_ts"))  # the MIN merge law
-            .select(
-                F.date_trunc("week", F.col("first_ts")).alias("cohort")
-            )
+    def cohort_sizes(firsts):
+        return (
+            firsts.select(F.date_trunc("week", "first_ts").alias("cohort"))
             .groupBy("cohort")
             .agg(F.count(F.lit(1)).alias("n_cohort"))
-            .createOrReplaceTempView(sink_table)
         )
 
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("cohort_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "events", sink_table, sink_dir, stream,
+        view="cohort timestamp, n_cohort long",
+        keys=["user_id", "batch"],
+        build_delta=lambda df: df.groupBy("user_id").agg(
+            F.min("ts").alias("first_ts")
+        ),
+        law=COHORT_LAW,
+        present=cohort_sizes,
     )
 
 
@@ -108,8 +91,6 @@ def append_flush_sentinels(
     import os
     import shutil
     import time as _time
-
-    from pyspark.sql import functions as F
 
     batch = spark.read.parquet(source_dir)
     mx = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
@@ -250,7 +231,6 @@ def start_funnel_channel(
 
     import pandas as pd
 
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import (
         GroupState,
         GroupStateTimeout,
@@ -500,6 +480,10 @@ def start_funnel_channel(
     )
 
 
+#: rolling-WAU merge law: per-day HLL registers merge by max
+WAU_LAW = merge_law(F.max, ["day", "bucket"], ["max_rho"])
+
+
 def start_wau_channel(
     spark,
     sf_dir: str,
@@ -511,54 +495,27 @@ def start_wau_channel(
     rolling_wau_hll`): each micro-batch commits its per-(day, bucket)
     HLL register deltas keyed (day, bucket, batch); the live view is
     the register file per day merged by element-wise MAX across
-    batches — the same merge law the global HLL channel proves, here
-    keyed by the calendar dimension so the 7-day window merge and the
-    per-day estimate are deterministic folds any consumer can run on
-    the view at any moment (they are pure functions of the registers,
-    oracle-proven in the registered batch query).
+    batches (``WAU_LAW``) — the same merge law the global HLL channel
+    proves, here keyed by the calendar dimension so the 7-day window
+    merge and the per-day estimate are deterministic folds any
+    consumer can run on the view at any moment (they are pure
+    functions of the registers, oracle-proven in the registered batch
+    query).
 
-    State: at most #batches x days x 2^p delta rows before
-    compact_log folds settled commits; the driver holds O(1)."""
-    from pyspark.sql import functions as F
-
+    State: a bounded number of days x 2^p register deltas, whatever
+    the batch count; the driver holds O(1)."""
     from ..llm.vocab import hll_keyed_rhos
-    from ..sources.scratch import scratch_dir
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        sink_dir = scratch_dir("wau_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "events")
-    spark.createDataFrame(
-        [], "day timestamp, bucket long, max_rho int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = hll_keyed_rhos(
-            batch_df.select(
-                F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
-            ),
+    return start_merge_channel(
+        spark, sf_dir, "events", sink_table, sink_dir, stream,
+        view="day timestamp, bucket long, max_rho int",
+        keys=["day", "bucket", "batch"],
+        build_delta=lambda df: hll_keyed_rhos(
+            df.select(F.date_trunc("day", F.col("ts")).alias("day"), "user_id"),
             "user_id",
             ["day"],
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["day", "bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("day", "bucket").agg(
-            F.max("max_rho").alias("max_rho")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.queryName(sink_table)
-        .foreachBatch(run_batch)
-        .option("checkpointLocation", scratch_dir("wau_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        law=WAU_LAW,
     )
 
 
@@ -759,8 +716,6 @@ def _maintained_layout_batch(
     replayed batch — the rebuild already rewrote the layout
     compactly."""
     import os
-
-    from pyspark.sql import functions as F
 
     from ..sources.sinks import commit_append, log_has_version
 

@@ -562,3 +562,107 @@ def channel_stats(spark, queries=None) -> "DataFrame":
             )
         )
     return spark.createDataFrame(rows, schema)
+
+
+def merge_law(agg, by: list[str], values: list[str]):
+    """A sketch's merge law as one fold over its delta log: group by
+    ``by`` and combine each column of ``values`` with ``agg``
+    (``F.sum`` for counters, ``F.max`` for registers, ``F.min`` for
+    firsts), keeping the group's newest ``batch`` so a folded row still
+    carries the log key ``by + ["batch"]``."""
+
+    def law(df: DataFrame) -> DataFrame:
+        return df.groupBy(*by).agg(
+            *[agg(c).alias(c) for c in values], F.max("batch").alias("batch")
+        )
+
+    return law
+
+
+def start_merge_channel(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    sink_table: str,
+    sink_dir: str | None,
+    stream: DataFrame | None,
+    view: str,
+    keys: list[str],
+    build_delta,
+    law=None,
+    present=None,
+):
+    """One live channel whose state is a delta log in the
+    transactional sink (`sources/sinks.py`).  Per micro-batch:
+
+    1. commit ``build_delta(batch_df)`` with ``commit_append``, version
+       = batch id (and column ``batch`` = batch id when ``keys`` has it);
+    2. once the live manifests list more files than
+       ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (read
+       per call), fold every commit but the newest by ``law``
+       (`compact_log`), so the re-read never pays Spark's listing job
+       and its input is bounded by sketch size, not batch count;
+    3. ``read_committed`` (keep-latest per ``keys``), merge by ``law``,
+       shape by ``present`` and publish as ``sink_table``, cut to the
+       columns of the ``view`` DDL (the empty view until a commit holds
+       rows).
+
+    ``law`` is a ``DataFrame -> DataFrame`` fold that keeps the delta's
+    columns and carries ``max(batch)`` (see `merge_law`); the same
+    object merges the view and folds the log.  ``law=None`` is an
+    upsert channel: the view is the keep-latest log and the fold keeps
+    each surviving row's stamp.
+
+    State and replay: the sketch lives in the sink, the driver holds
+    O(1), and the query checkpoints to ``<sink_dir>/_ckpt``, so a
+    restart on the same ``sink_dir`` resumes.  A batch that crashed
+    after its commit re-runs with the same batch id and keys, which
+    keep-latest dedups — also when the replay's fold swallows the
+    original commit, since folded rows keep their keys and stamps.  The
+    newest commit, the only one that may replay, is never folded.
+    ``sink_dir`` defaults to a scratch directory and ``stream`` to the
+    file stream over ``table``."""
+    import os
+
+    from ..sources.scratch import scratch_dir
+    from ..sources.sinks import (
+        commit_append,
+        compact_log,
+        live_file_count,
+        read_committed,
+    )
+
+    if sink_dir is None:
+        sink_dir = scratch_dir(f"{sink_table}_")
+    if stream is None:
+        stream = read_table_stream(spark, sf_dir, table)
+    empty = spark.createDataFrame([], view)
+    empty.createOrReplaceTempView(sink_table)
+
+    def run_batch(batch_df, batch_id):
+        delta = build_delta(batch_df)
+        if "batch" in keys:
+            delta = delta.withColumn("batch", F.lit(int(batch_id)).cast("long"))
+        commit_append(delta, sink_dir, version=float(batch_id))
+        threshold = spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        )
+        if live_file_count(sink_dir) > int(threshold):
+            compact_log(spark, sink_dir, keys, merge=law, keep_last=1)
+        try:
+            state = read_committed(spark, sink_dir, keys)
+        except FileNotFoundError:
+            return  # every commit so far was empty: keep the empty view
+        if law is not None:
+            state = law(state)
+        if present is not None:
+            state = present(state)
+        state.select(*empty.columns).createOrReplaceTempView(sink_table)
+
+    return (
+        stream.writeStream.queryName(sink_table)
+        .foreachBatch(run_batch)
+        .option("checkpointLocation", os.path.join(sink_dir, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )

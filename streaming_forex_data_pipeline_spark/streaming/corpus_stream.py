@@ -20,6 +20,13 @@ distinct-count scan, and reusable by other consumers); the streaming
 variant trades that for statelessness.  Outputs are identical by
 construction: both round the attributes to 6dp BEFORE thresholding,
 so keep/reasons agree bit-for-bit.
+
+The sketch channels (CMS, HLL, histogram, reservoir, DSIR, gate
+dashboard) and the upsert channels (incremental dedup,
+decontamination) wrap `channels.start_merge_channel`, whose fold keeps
+the live log within ``spark.sql.sources.parallelPartitionDiscovery.
+threshold`` files (32 by default): a sketch view reads at most that
+many fixed-size deltas, however many batches arrived.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..llm.corpus import words_array
 from ..llm.text import avg_word_len
+from .channels import merge_law, read_table_stream, start_merge_channel
 
 
 def streaming_quality_gate(docs: DataFrame, text: str = "text") -> DataFrame:
@@ -80,7 +88,6 @@ def start_corpus_gate_channel(
     """Wire the channel: documents stream -> stateless gate -> memory
     sink (availableNow in tests; the real deployment points the same
     writeStream at the bronze->silver table)."""
-    from .channels import read_table_stream
 
     gated = streaming_quality_gate(
         read_table_stream(spark, sf_dir, "documents")
@@ -108,15 +115,10 @@ def start_incremental_dedup_channel(
     ``foreachBatch``, the same per-micro-batch recompute pattern the
     reference's channels use.
 
-    Pairs land through the transactional ``commit_append`` sink
-    (`sources/sinks.py`): each micro-batch's pairs are written
-    executor-side to ``sink_dir`` and published with one atomic
-    manifest — NO driver-side materialization, so per-batch cost
-    depends only on that batch's pairs, never on the total found so
-    far, and the driver holds O(1) state.  ``sink_table`` is refreshed
-    as a lazy view over the committed files; the batch id is the
-    commit version, so a replayed micro-batch (restart-after-crash)
-    merges idempotently via read_committed's keep-latest-per-pair.
+    Pairs land executor-side in the transactional sink, an upsert
+    channel of `channels.start_merge_channel` (state, replay and
+    restart contract there): per-batch cost depends only on that
+    batch's pairs, never on the total found so far.
 
     At scale the static side is the precomputed band-bucket index
     table and each micro-batch joins it — state lives in the table,
@@ -130,45 +132,27 @@ def start_incremental_dedup_channel(
     availableNow single-file source delivers one micro-batch, so the
     parity test is exact.
     """
-    from pyspark.sql import functions as F
-
     from ..llm.dedup import incremental_near_dup_pairs
-    from ..sources.sinks import commit_append, read_committed
-    from ..sources.scratch import scratch_dir
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        sink_dir = scratch_dir("inc_dedup_pairs_")
     index = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < cutoff
     )
     stream = read_table_stream(spark, sf_dir, "documents").filter(
         F.col("doc_id") >= cutoff
     )
-    spark.createDataFrame(
-        [], "doc_a long, doc_b long, jaccard double"
-    ).createOrReplaceTempView(sink_table)
 
-    def run_batch(batch_df, batch_id):
-        both = index.unionByName(batch_df)
-        pairs = incremental_near_dup_pairs(
-            both, F.col("doc_id") >= cutoff, threshold=1.0, bands=1
+    def build_delta(batch_df):
+        return incremental_near_dup_pairs(
+            index.unionByName(batch_df), F.col("doc_id") >= cutoff,
+            threshold=1.0, bands=1,
         )
-        commit_append(pairs, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["doc_a", "doc_b"]
-            )
-        except FileNotFoundError:
-            # every commit so far carried zero pairs: keep the empty view
-            return
-        committed.createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="doc_a long, doc_b long, jaccard double",
+        keys=["doc_a", "doc_b"],
+        build_delta=build_delta,
     )
 
 
@@ -193,15 +177,15 @@ def start_decontamination_channel(
     (batch/stream parity by construction: it IS the batch code).
     Eval rows in the stream are dropped by definition.
 
+    Survivors land as an upsert channel of
+    `channels.start_merge_channel`, keyed on doc_id.
+
     At 100 TB-crawl scale the eval gram frame is megabytes and
     broadcast; each micro-batch pays one map-side hash join and its
     own per-doc aggregation — per-batch cost independent of history,
     the same contract as the incremental-dedup channel."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import word_ngrams, words_array
+    from ..llm.corpus import word_ngrams
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
     grams = F.array_distinct(word_ngrams(words_array("text"), n))
     ev = (
@@ -214,44 +198,23 @@ def start_decontamination_channel(
     stream = read_table_stream(spark, sf_dir, "documents").filter(
         F.col("doc_id") % eval_mod != 0
     )
-    spark.createDataFrame(
-        [], "doc_id long, source string, n_chars long"
-    ).createOrReplaceTempView(sink_table)
 
-    from ..sources.sinks import commit_append, read_committed
-
-    # sink_dir is a parameter (matching the incremental-dedup channel's
-    # signature) so a restarted channel can resume the SAME commit log
-    # and replays merge idempotently; mkdtemp is only the demo default.
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("decon_survivors_")
-
-    def run_batch(batch_df, batch_id):
+    def build_delta(batch_df):
         ex = batch_df.select("doc_id", F.explode(grams).alias("gram"))
         bad = (
             ex.join(F.broadcast(ev), "gram", "left_semi")
             .select("doc_id")
             .distinct()
         )
-        out = batch_df.select("doc_id", "source", "n_chars").join(
+        return batch_df.select("doc_id", "source", "n_chars").join(
             bad, "doc_id", "left_anti"
         )
-        # executor-side append + atomic manifest (same O(1)-driver-state
-        # contract as the incremental-dedup channel; replays merge
-        # idempotently on doc_id)
-        commit_append(out, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(spark, sink_dir, keys=["doc_id"])
-        except FileNotFoundError:
-            return
-        committed.createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="doc_id long, source string, n_chars long",
+        keys=["doc_id"],
+        build_delta=build_delta,
     )
 
 
@@ -267,7 +230,6 @@ def start_media_decode_channel(
     map stages of the streaming query (the shape a 100 TB multimodal
     ingest uses for decode/feature-extract on arrival)."""
     from ..llm.multimodal import decode_images, encode_images
-    from .channels import read_table_stream
 
     stream = read_table_stream(spark, sf_dir, "documents")
     decoded = decode_images(encode_images(stream))
@@ -278,6 +240,10 @@ def start_media_decode_channel(
         .trigger(availableNow=True)
         .start()
     )
+
+
+#: Count-Min merge law: sketches over disjoint streams add counter-wise
+CMS_LAW = merge_law(F.sum, ["row", "bucket"], ["c"])
 
 
 def start_cms_channel(
@@ -292,52 +258,27 @@ def start_cms_channel(
     its OWN depth x width sketch and appends it as a delta through the
     transactional ``commit_append`` sink, keyed (row, bucket, batch).
     The live sketch is a lazy VIEW that merges the delta log by
-    counter-wise SUM — the CMS merge law (sketches over disjoint
-    streams add), proven against the batch sketch in
-    tests/test_streaming.py across multiple micro-batches.
+    counter-wise SUM (``CMS_LAW``) — sketches over disjoint streams
+    add — proven against the batch sketch in tests/test_streaming.py
+    across multiple micro-batches.
 
-    This is the sketch-state-in-the-table shape: the driver holds
-    O(1); a replayed micro-batch rewrites the same (row, bucket,
-    batch) keys and ``read_committed``'s keep-latest dedups it, so
-    restarts merge idempotently; and the view's aggregation input is
-    #batches x depth x width rows — the FIXED sketch size is what
-    bounds it, never the vocabulary or the corpus."""
-    from pyspark.sql import functions as F
-
+    State and replay follow `channels.start_merge_channel`: the view
+    reads a bounded number of depth x width sketches, never a
+    vocabulary-, corpus- or batch-count-sized input."""
     from ..llm.vocab import cms_build
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("cms_sketch_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "row int, bucket long, c long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = cms_build(batch_df).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["row", "bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("row", "bucket").agg(
-            F.sum("c").alias("c")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="row int, bucket long, c long",
+        keys=["row", "bucket", "batch"],
+        build_delta=cms_build,
+        law=CMS_LAW,
     )
+
+
+#: HyperLogLog merge law: the register union of two streams is the
+#: bucket-wise max
+HLL_LAW = merge_law(F.max, ["bucket"], ["max_rho"])
 
 
 def start_hll_channel(
@@ -351,54 +292,28 @@ def start_hll_channel(
     each micro-batch emits its own complete 2^p register file as a
     delta keyed (bucket, batch) through ``commit_append``; the live
     register file is a lazy VIEW merging the delta log by element-wise
-    MAX — the HLL merge law (the register union of two streams is the
-    bucket-wise max), proven against the batch register file across
+    MAX (``HLL_LAW``), proven against the batch register file across
     multiple micro-batches in tests/test_streaming.py.
 
-    Same state contract as the CMS channel: sketch lives in the sink
-    table, driver state O(1), replays idempotent via keep-latest on
-    (bucket, batch), view input bounded by #batches x 2^p rows
-    regardless of stream cardinality.  `hll_estimate` folds the
-    merged view into the live distinct count whenever a consumer asks
-    — the register file IS the streaming state, estimates are free."""
-    from pyspark.sql import functions as F
-
-    from ..llm.corpus import words_array
+    Same state contract as the CMS channel: view input is a bounded
+    number of 2^p-row register files.  `hll_estimate` folds the merged
+    view into the live distinct count whenever a consumer asks — the
+    register file IS the streaming state, estimates are free."""
     from ..llm.vocab import hll_registers
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("hll_regs_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "bucket long, max_rho int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        items = batch_df.select(F.explode(words_array("text")).alias("item"))
-        delta = hll_registers(items).withColumn(
-            "batch", F.lit(int(batch_id)).cast("long")
-        )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["bucket", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("bucket").agg(
-            F.max("max_rho").alias("max_rho")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="bucket long, max_rho int",
+        keys=["bucket", "batch"],
+        build_delta=lambda df: hll_registers(
+            df.select(F.explode(words_array("text")).alias("item"))
+        ),
+        law=HLL_LAW,
     )
+
+
+#: histogram merge law: bin counts add
+HIST_LAW = merge_law(F.sum, ["bin"], ["c"])
 
 
 def start_histogram_channel(
@@ -415,46 +330,20 @@ def start_histogram_channel(
     """Streaming face of the histogram rank sketch (`llm/corpus.py:
     histogram_sketch`): each micro-batch commits its own complete
     n_bins+2 bin spine as a delta keyed (bin, batch); the live
-    histogram is a lazy VIEW summing the delta log bin-wise — the
-    histogram merge law, same contract as the CMS/HLL channels (state
-    in the sink table, O(1) driver, idempotent replays, view input
-    bounded by #batches x bins).  `histogram_quantiles` folds the
-    merged view into live quantile estimates on demand."""
-    from pyspark.sql import functions as F
-
+    histogram is a lazy VIEW summing the delta log bin-wise
+    (``HIST_LAW``), same contract as the CMS/HLL channels.
+    `histogram_quantiles` folds the merged view into live quantile
+    estimates on demand."""
     from ..llm.corpus import histogram_sketch
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("hist_sketch_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "bin int, c long"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
-        delta = histogram_sketch(
-            batch_df, value_col, lo=lo, hi=hi, n_bins=n_bins
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["bin", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("bin").agg(
-            F.sum("c").alias("c")
-        ).createOrReplaceTempView(sink_table)
-
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="bin int, c long",
+        keys=["bin", "batch"],
+        build_delta=lambda df: histogram_sketch(
+            df, value_col, lo=lo, hi=hi, n_bins=n_bins
+        ),
+        law=HIST_LAW,
     )
 
 
@@ -473,66 +362,50 @@ def start_reservoir_channel(
     per-row function, the reservoir over a stream is just "the k best
     keys seen so far" — each micro-batch commits its OWN top-k as a
     delta keyed (doc_id, batch), and the live sample is a lazy VIEW
-    taking the global top-k over the delta log (key max-merge, the
-    sampling analogue of the sketch channels' sum/max laws; proven
+    taking the global top-k over the delta log (the top-k merge law,
+    the sampling analogue of the sketch channels' sum/max laws; proven
     equal to the batch sample over the whole table in
     tests/test_streaming.py across real micro-batches).
 
-    Same state contract as the sketch channels: sample state lives in
-    the sink table (at most #batches x k rows before the view's
-    top-k), the driver holds O(1), replays dedup idempotently.  A
-    seeded rerun — batch or stream, any partitioning — picks the
-    identical rows."""
+    Same state contract as the sketch channels; a fold keeps only the
+    top k.  A seeded rerun — batch or stream, any partitioning — picks
+    the identical rows."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..llm.corpus import weighted_reservoir_sample
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
+    best = Window.orderBy(F.desc("res_key_raw"), F.asc("doc_id"))
 
-        sink_dir = scratch_dir("reservoir_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    spark.createDataFrame(
-        [], "doc_id long, res_key double, sample_rank int"
-    ).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
+    def build_delta(batch_df):
         # the delta carries the UNROUNDED key: cross-batch re-ranking
         # on a display-rounded key would collapse realistic weights
         # into ties (the batch face ranks raw for the same reason)
-        top = weighted_reservoir_sample(
+        return weighted_reservoir_sample(
             batch_df.select("doc_id", weight_col),
             k=k,
             weight_col=weight_col,
             seed=seed,
             keep_raw=True,
         ).select("doc_id", "res_key_raw")
-        delta = top.withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["doc_id", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        win = Window.orderBy(F.desc("res_key_raw"), F.asc("doc_id"))
-        committed.select("doc_id", "res_key_raw").withColumn(
-            "sample_rank", F.row_number().over(win)
-        ).filter(F.col("sample_rank") <= k).withColumn(
-            "res_key", F.round("res_key_raw", 6)
-        ).drop("res_key_raw").createOrReplaceTempView(
-            sink_table
-        )
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    def top_k(df):
+        ranked = df.withColumn("__rank", F.row_number().over(best))
+        return ranked.filter(F.col("__rank") <= k).drop("__rank")
+
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="doc_id long, sample_rank int, res_key double",
+        keys=["doc_id", "batch"],
+        build_delta=build_delta,
+        law=top_k,
+        present=lambda df: df.withColumn(
+            "sample_rank", F.row_number().over(best)
+        ).withColumn("res_key", F.round("res_key_raw", 6)),
     )
+
+
+#: DSIR merge law: the models' per-bucket token counts add
+DSIR_LAW = merge_law(F.sum, ["b"], ["cr", "ct"])
 
 
 def start_dsir_model_channel(
@@ -547,37 +420,24 @@ def start_dsir_model_channel(
     """Streaming face of the DSIR hashed-unigram models (`llm/text.py:
     dsir_logratio`): the models' whole sufficient statistic is a pair
     of per-bucket token counts (raw corpus, target slice) — exact
-    integers that merge by ADDITION — so a continuous ingest keeps
-    them live with the same delta-log contract as the sketch
-    channels: each micro-batch commits its (bucket, cr, ct) deltas
-    keyed (b, batch), the live model is a lazy VIEW summing the log,
-    and importance weights for any document are computable against
-    the view at any moment without rescanning history.  Parity with
-    the batch models is proven across real micro-batches in
-    tests/test_streaming.py.
+    integers that merge by ADDITION (``DSIR_LAW``) — so a continuous
+    ingest keeps them live with the same delta-log contract as the
+    sketch channels (`channels.start_merge_channel`): each micro-batch
+    commits its (bucket, cr, ct) deltas keyed (b, batch), the live
+    model is a lazy VIEW summing the log, and importance weights for
+    any document are computable against the view at any moment
+    without rescanning history.  Parity with the batch models is
+    proven across real micro-batches in tests/test_streaming.py.
 
     ``target_pred`` is the Column predicate naming the in-domain
     slice (default lang = 'en', matching the registered dsir_weights
     query)."""
-    from pyspark.sql import functions as F
-
     from ..llm.dedup import portable_token_hash
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("dsir_model_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
     if target_pred is None:
         target_pred = F.col("lang") == "en"
-    spark.createDataFrame(
-        [], "b long, cr long, ct long"
-    ).createOrReplaceTempView(sink_table)
 
-    def run_batch(batch_df, batch_id):
+    def build_delta(batch_df):
         ex = batch_df.select(
             target_pred.alias("is_target"),
             F.explode(
@@ -587,28 +447,26 @@ def start_dsir_model_channel(
             "is_target",
             (portable_token_hash(F.col("tok")) % n_buckets).alias("b"),
         )
-        delta = (
-            ex.groupBy("b")
-            .agg(
-                F.count(F.lit(1)).alias("cr"),
-                F.count(F.when(F.col("is_target"), 1)).alias("ct"),
-            )
-            .withColumn("batch", F.lit(int(batch_id)).cast("long"))
+        return ex.groupBy("b").agg(
+            F.count(F.lit(1)).alias("cr"),
+            F.count(F.when(F.col("is_target"), 1)).alias("ct"),
         )
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(spark, sink_dir, keys=["b", "batch"])
-        except FileNotFoundError:
-            return
-        committed.groupBy("b").agg(
-            F.sum("cr").alias("cr"), F.sum("ct").alias("ct")
-        ).createOrReplaceTempView(sink_table)
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="b long, cr long, ct long",
+        keys=["b", "batch"],
+        build_delta=build_delta,
+        law=DSIR_LAW,
     )
+
+
+#: the quality gate's rule codes, one dashboard counter each
+GATE_RULES = ("too_short", "too_long", "dup_words", "top_word", "word_len")
+#: gate-dashboard merge law: per-source counters add
+GATE_LAW = merge_law(
+    F.sum, ["source"], ["n_docs", "n_keep", *[f"n_{r}" for r in GATE_RULES]]
+)
 
 
 def start_gate_dashboard_channel(
@@ -623,33 +481,16 @@ def start_gate_dashboard_channel(
     function of ONE document, so per-source rule counts are ADDITIVE
     across micro-batches — each batch commits its own
     (source, n_docs, n_keep, n_<rule>...) delta and the live
-    dashboard is a lazy VIEW summing the delta log (the CMS merge
-    law applied to compliance counters).  Same delta-log contract as
-    every sketch channel: state in the sink table, O(1) driver,
-    idempotent replays keyed (source, batch), view input bounded by
-    #batches x #sources and foldable by `compact_log`."""
-    from pyspark.sql import functions as F
-
+    dashboard is a lazy VIEW summing the delta log (``GATE_LAW``, the
+    CMS merge law applied to compliance counters).  Same delta-log
+    contract as every sketch channel: replays dedup on (source,
+    batch)."""
     from ..llm.corpus import quality_gate
-    from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
-    if sink_dir is None:
-        from ..sources.scratch import scratch_dir
-
-        sink_dir = scratch_dir("gate_dash_")
-    if stream is None:
-        stream = read_table_stream(spark, sf_dir, "documents")
-    rules = ["too_short", "too_long", "dup_words", "top_word", "word_len"]
-    schema = "source string, n_docs long, n_keep long, " + ", ".join(
-        f"n_{r} long" for r in rules
-    )
-    spark.createDataFrame([], schema).createOrReplaceTempView(sink_table)
-
-    def run_batch(batch_df, batch_id):
+    def build_delta(batch_df):
         g = quality_gate(batch_df).select("doc_id", "reasons", "keep")
         j = g.join(batch_df.select("doc_id", "source"), "doc_id")
-        delta = j.groupBy("source").agg(
+        return j.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0))
             .cast("long")
@@ -662,26 +503,17 @@ def start_gate_dashboard_channel(
                 )
                 .cast("long")
                 .alias(f"n_{rl}")
-                for rl in rules
+                for rl in GATE_RULES
             ],
-        ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
-        commit_append(delta, sink_dir, version=float(batch_id))
-        try:
-            committed = read_committed(
-                spark, sink_dir, keys=["source", "batch"]
-            )
-        except FileNotFoundError:
-            return
-        committed.groupBy("source").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_keep").alias("n_keep"),
-            *[F.sum(f"n_{rl}").alias(f"n_{rl}") for rl in rules],
-        ).createOrReplaceTempView(sink_table)
+        )
 
-    return (
-        stream.writeStream.foreachBatch(run_batch)
-        .trigger(availableNow=True)
-        .start()
+    return start_merge_channel(
+        spark, sf_dir, "documents", sink_table, sink_dir, stream,
+        view="source string, n_docs long, n_keep long, "
+        + ", ".join(f"n_{r} long" for r in GATE_RULES),
+        keys=["source", "batch"],
+        build_delta=build_delta,
+        law=GATE_LAW,
     )
 
 
@@ -763,7 +595,6 @@ def start_ivf_silver_channel(
     from ..sources.scratch import scratch_dir
     from ..sources.sinks import commit_append
     from ..sources.tables import load_table
-    from .channels import read_table_stream
 
     if sink_dir is None:
         sink_dir = scratch_dir("ivf_assign_log_")
@@ -899,8 +730,6 @@ def start_video_signature_channel(
     committed pair log is what makes a clip pair whose evidence
     straddles micro-batches reach the threshold the moment its later
     frames arrive."""
-    from pyspark.sql import functions as F
-
     from ..llm.multimodal import dhash_video_frames, encode_videos
     from ..plans.modal_q import VIDEO_EVERY_N, fid_clip, fid_frame, vid_fid
 
@@ -987,12 +816,9 @@ def start_signature_channel(
     the video face reduces frame pairs to clip pairs here, so
     evidence that straddles micro-batches counts toward the clip
     threshold as soon as it lands."""
-    from pyspark.sql import functions as F
-
     from ..llm.dedup import incremental_dhash_pairs
     from ..sources.scratch import scratch_dir
     from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
     if sig_dir is None:
         sig_dir = scratch_dir(f"{prefix}_index_")
@@ -1079,12 +905,9 @@ def start_embedding_index_channel(
     commit BEFORE vectors, and the index read anti-joins the current
     batch's ids so a replay whose vectors already landed cannot
     self-pair."""
-    from pyspark.sql import functions as F
-
     from ..llm.similarity import incremental_embedding_pairs
     from ..sources.scratch import scratch_dir
     from ..sources.sinks import commit_append, read_committed
-    from .channels import read_table_stream
 
     if vec_dir is None:
         vec_dir = scratch_dir("emb_idx_index_")
@@ -1199,8 +1022,6 @@ def start_knn_graph_channel(
     can never be reclaimed out from under a reader.  The channel's
     OWN state (``knng_idx_*`` dirs) is outside both prefixes by
     construction.  ``None`` disables retirement."""
-    from pyspark.sql import functions as F
-
     from ..llm.similarity import knn_graph, lsh_bucket
     from ..sources.scratch import retire_stale_silvers, scratch_dir
     from ..sources.sinks import (
@@ -1209,7 +1030,6 @@ def start_knn_graph_channel(
         read_committed,
         vacuum,
     )
-    from .channels import read_table_stream
 
     if vec_dir is None:
         vec_dir = scratch_dir("knng_idx_vecs_")

@@ -1,5 +1,6 @@
 """P7 random-forest importance invariants (no SQL oracle possible for
-model internals) and feature-matrix alignment checks."""
+model internals), feature-matrix alignment checks, and the row caps on
+the single-partition fit pins (importance and kmeans)."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from streaming_forex_data_pipeline_spark.llm import similarity as SIM
 from streaming_forex_data_pipeline_spark.operators import importance as IMP
 from streaming_forex_data_pipeline_spark.sources.tables import candles_from_events
 
@@ -227,3 +229,34 @@ def test_consensus_all_methods_null_method_averaging(spark):
         assert out[f]["methods_count"] == (
             6 if f != "range_frac" else degen["methods_count"]
         )
+
+
+def test_pin_fit_layout_row_cap(spark, monkeypatch):
+    monkeypatch.setenv("SFDP_PIN_FIT_MAX_ROWS", "1")
+    df = spark.createDataFrame(
+        [("EURUSD", 1, 0.5), ("EURUSD", 2, 0.6)], ["symbol", "ts", "x"]
+    )
+    with pytest.raises(ValueError, match="single-partition fit cap"):
+        IMP._pin_fit_layout(df)
+
+
+def test_pin_fit_layout_under_cap_is_single_sorted_partition(spark):
+    df = spark.createDataFrame(
+        [("EURUSD", 2, 0.5), ("EURUSD", 1, 0.6), ("GBPUSD", 1, 0.7)],
+        ["symbol", "ts", "x"],
+    )
+    pinned = IMP._pin_fit_layout(df)
+    assert pinned.rdd.getNumPartitions() == 1
+    rows = pinned.collect()
+    assert [(r["symbol"], r["ts"]) for r in rows] == sorted(
+        (r["symbol"], r["ts"]) for r in rows
+    )
+
+
+def test_kmeans_fit_row_cap(spark, monkeypatch):
+    monkeypatch.setenv("SFDP_PIN_FIT_MAX_ROWS", "1")
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], ["vec_id", "embedding"]
+    )
+    with pytest.raises(ValueError, match="single-partition fit cap"):
+        SIM.kmeans_centroids(emb, n_cells=2)

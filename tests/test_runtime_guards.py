@@ -1,17 +1,21 @@
 """Runtime guards: the package ship runs once per application even under
-concurrent first calls, and the connected-components scale knobs are read
-on every call rather than at import."""
+concurrent first calls, the connected-components scale knobs are read
+on every call rather than at import, ``lit_double_array`` admits only
+finite literals, and ``dot``/``norm`` resolve struct-field paths."""
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_forex_data_pipeline_spark.llm import dedup as DD
+from streaming_forex_data_pipeline_spark.llm import similarity as SIM
 from streaming_forex_data_pipeline_spark.sources import tables as T
 
 
@@ -102,3 +106,43 @@ def test_cc_edge_partition_target_read_per_call(spark, monkeypatch):
     coalesced.clear()
     assert _clusters(DD.connected_components(_pairs(spark))) == WANT
     assert coalesced == [(4,)]  # ceil(8 / 2)
+
+
+def test_lit_double_array_rejects_non_finite():
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError, match="finite"):
+            SIM.lit_double_array([1.0, bad])
+
+
+def test_lit_double_array_roundtrips_finite(spark):
+    vals = [0.1, -2.5, 1e-300, 123456.789]
+    got = spark.range(1).select(
+        SIM.lit_double_array(vals).alias("a")
+    ).collect()[0]["a"]
+    assert got == vals
+
+
+def test_dot_norm_fall_back_for_struct_field_paths(spark):
+    """ADVICE r14: dot('payload.v', ...) must resolve the struct field
+    via the Column path (the backtick fast path would mis-quote it)."""
+    df = spark.createDataFrame([([3.0, 4.0],)], ["v"]).select(
+        F.struct(F.col("v")).alias("payload")
+    )
+    row = df.select(
+        SIM.dot("payload.v", "payload.v").alias("d"),
+        SIM.norm("payload.v").alias("n"),
+    ).collect()[0]
+    assert row["d"] == pytest.approx(25.0)
+    assert row["n"] == pytest.approx(5.0)
+
+
+def test_dot_fast_path_matches_column_path(spark):
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], ["a", "b"]
+    )
+    fast = df.select(SIM.dot("a", "b").alias("d")).collect()[0]["d"]
+    slow = df.select(
+        SIM.dot(F.col("a"), F.col("b")).alias("d")
+    ).collect()[0]["d"]
+    assert fast == slow == pytest.approx(32.0)
+    assert math.isfinite(fast)

@@ -442,9 +442,9 @@ def test_compact_log_preserves_state_and_bounds_manifests(spark, tmp_path):
 
 
 def test_compact_log_with_aggregating_merge_bounds_rows(spark, sf_dir, tmp_path):
-    """The CMS channel's delta log compacts with a summing merge: the
-    merged view still equals the batch sketch, and the folded commit
-    holds sketch-sized rows instead of #batches x sketch."""
+    """The CMS channel's delta log compacts with the channel's own
+    summing law: the merged view still equals the batch sketch, and the
+    folded commit holds sketch-sized rows instead of #batches x sketch."""
     from pyspark.sql import functions as F
 
     from streaming_forex_data_pipeline_spark.llm import vocab as VO
@@ -454,6 +454,7 @@ def test_compact_log_with_aggregating_merge_bounds_rows(spark, sf_dir, tmp_path)
     )
     from streaming_forex_data_pipeline_spark.sources.tables import load_table
     from streaming_forex_data_pipeline_spark.streaming.corpus_stream import (
+        CMS_LAW,
         start_cms_channel,
     )
 
@@ -472,16 +473,10 @@ def test_compact_log_with_aggregating_merge_bounds_rows(spark, sf_dir, tmp_path)
     )
     q.awaitTermination(180)
 
-    def merge(df):
-        return (
-            df.groupBy("row", "bucket")
-            .agg(F.sum("c").alias("c"), F.max("batch").alias("batch"))
-        )
-
     # the availableNow stream has terminated — no replay is possible,
     # so every commit is settled and keep_last=0 may fold them all
     cid = compact_log(
-        spark, sink_dir, keys=["row", "bucket", "batch"], merge=merge,
+        spark, sink_dir, keys=["row", "bucket", "batch"], merge=CMS_LAW,
         keep_last=0,
     )
     assert cid is not None
@@ -816,3 +811,63 @@ def test_read_committed_rejects_commits_with_conflicting_types(spark, tmp_path):
 
     with pytest.raises(ValueError, match="'v'"):
         S.read_committed(spark, d, ["k"])
+
+
+def test_merge_channels_fold_their_log_under_the_listing_threshold(
+    spark, sf_dir, tmp_path
+):
+    """Ten one-file micro-batches through the CMS and WAU channels with
+    the listing threshold at 4: the channels fold settled commits by
+    their merge law, so after the drain the live log lists at most 4
+    files, re-reading it launches no Spark job, its rows stay within
+    4 sketches (unfolded it would hold 10 deltas), and the view still
+    equals the batch sketch."""
+    from streaming_forex_data_pipeline_spark.llm import vocab as VO
+    from streaming_forex_data_pipeline_spark.streaming import (
+        analytics_stream as AS,
+        corpus_stream as CS,
+    )
+
+    cases = {
+        "cms": ("documents", ["row", "bucket", "batch"], CS.start_cms_channel,
+                lambda d: VO.cms_build(d)),
+        "wau": ("events", ["day", "bucket", "batch"], AS.start_wau_channel,
+                lambda e: VO.hll_keyed_rhos(
+                    e.select(F.date_trunc("day", "ts").alias("day"), "user_id"),
+                    "user_id", ["day"])),
+    }
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        for name, (table, keys, start, sketch) in cases.items():
+            d = load_table(spark, sf_dir, table)
+            src = str(tmp_path / f"{name}_src")
+            d.repartition(10).write.parquet(src)
+            stream = (
+                spark.readStream.schema(d.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            sink_dir = str(tmp_path / f"{name}_sink")
+            q = start(
+                spark, sf_dir, sink_table=f"bounded_{name}",
+                sink_dir=sink_dir, stream=stream,
+            )
+            q.awaitTermination(300)
+            assert q.exception() is None, q.exception()
+            assert len(q.recentProgress) >= 10
+            assert max(S.log_versions(sink_dir)) == 9.0
+            assert S.live_file_count(sink_dir) <= 4
+            assert _jobs_while(
+                spark, lambda: S.read_committed(spark, sink_dir, keys)
+            ) == []
+            want = sketch(d)
+            got = spark.table(f"bounded_{name}")
+            assert {tuple(r) for r in got.collect()} == {
+                tuple(r) for r in want.select(*got.columns).collect()
+            }
+            n_log = S.read_committed(spark, sink_dir, keys).count()
+            assert n_log <= 4 * want.count(), (name, n_log)
+    finally:
+        spark.conf.set(key, old)

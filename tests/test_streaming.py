@@ -850,6 +850,144 @@ def test_wau_channel_registers_match_batch(spark, sf_dir, tmp_path):
     assert got == want and len(got) > 50
 
 
+def _merge_channel_case(law):
+    """(input table, start(spark, sf_dir, view, sink_dir, stream,
+    monkeypatch), batch reference(spark, sf_dir)) of one channel per
+    merge law."""
+    from streaming_forex_data_pipeline_spark.llm import corpus as CO
+    from streaming_forex_data_pipeline_spark.llm import dedup as DD
+    from streaming_forex_data_pipeline_spark.llm import vocab as VO
+    from streaming_forex_data_pipeline_spark.llm.corpus import words_array
+    from streaming_forex_data_pipeline_spark.sources.tables import load_table
+    from streaming_forex_data_pipeline_spark.streaming import (
+        analytics_stream as AS,
+        corpus_stream as CS,
+    )
+
+    def kw(fn, **extra):
+        return lambda spark, sf, view, sink_dir, stream, mp: fn(
+            spark, sf, sink_table=view, sink_dir=sink_dir, stream=stream,
+            **extra,
+        )
+
+    def start_decon(spark, sf, view, sink_dir, stream, mp):
+        # the channel owns its stream; hand it the two-file one
+        mp.setattr(CS, "read_table_stream", lambda *_: stream)
+        return CS.start_decontamination_channel(
+            spark, sf, sink_table=view, sink_dir=sink_dir
+        )
+
+    def docs(spark, sf):
+        return load_table(spark, sf, "documents")
+
+    def cohorts(spark, sf):
+        return (
+            load_table(spark, sf, "events").groupBy("user_id")
+            .agg(F.date_trunc("week", F.min("ts")).alias("cohort"))
+            .groupBy("cohort").agg(F.count(F.lit(1)).alias("n_cohort"))
+        )
+
+    return {
+        "sum": ("documents", kw(CS.start_cms_channel),
+                lambda s, sf: VO.cms_build(docs(s, sf))),
+        "max": ("documents", kw(CS.start_hll_channel),
+                lambda s, sf: VO.hll_registers(docs(s, sf).select(
+                    F.explode(words_array("text")).alias("item")))),
+        "min": ("events", kw(AS.start_cohort_channel), cohorts),
+        "top_k": ("documents", kw(CS.start_reservoir_channel, k=25),
+                  lambda s, sf: CO.weighted_reservoir_sample(
+                      docs(s, sf).select("doc_id", "n_chars"), k=25,
+                      weight_col="n_chars", seed="res1")),
+        "upsert": ("documents", start_decon,
+                   lambda s, sf: DD.decontaminate(
+                       docs(s, sf), F.col("doc_id") % 25 == 0, n=4)),
+    }[law]
+
+
+def _log_manifests(sink_dir):
+    """commit id -> manifest, for every manifest in a sink's log."""
+    import json
+    import os
+
+    log_dir, out = os.path.join(sink_dir, "_log"), {}
+    for f in os.listdir(log_dir):
+        if f.endswith(".json") and not f.startswith("."):
+            with open(os.path.join(log_dir, f)) as fh:
+                out[int(f[: -len(".json")])] = json.load(fh)
+    return out
+
+
+@pytest.mark.parametrize("fold", [False, True], ids=["replay", "replay_folds"])
+@pytest.mark.parametrize("law", ["sum", "max", "min", "top_k", "upsert"])
+def test_merge_channel_restart_replays_only_the_uncommitted_batch(
+    spark, sf_dir, tmp_path, monkeypatch, law, fold
+):
+    """Crash after the sink commit of batch 1, before the checkpoint
+    commit: a restart on the same sink_dir re-runs batch 1 only — the
+    log gains exactly one data commit, version 1 — and the view still
+    equals the batch operator.  With ``fold`` the listing threshold is
+    lowered so the replayed batch also folds the log, swallowing the
+    original batch-1 commit: the replay must still dedup against it."""
+    import glob
+    import os
+
+    from streaming_forex_data_pipeline_spark.sources import sinks as S
+    from streaming_forex_data_pipeline_spark.sources.tables import load_table
+
+    table, start, ref = _merge_channel_case(law)
+    d = load_table(spark, sf_dir, table)
+    src = str(tmp_path / "src")
+    if table == "events":
+        d.repartitionByRange(2, "ts").write.parquet(src)
+    else:
+        d.repartition(2).write.parquet(src)
+    sink_dir, view = str(tmp_path / "sink"), f"replay_{law}_{int(fold)}"
+
+    def run():
+        stream = (
+            spark.readStream.schema(d.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = start(spark, sf_dir, view, sink_dir, stream, monkeypatch)
+        q.awaitTermination(180)
+        assert q.exception() is None, q.exception()
+
+    run()
+    before = _log_manifests(sink_dir)
+    assert sorted(m["version"] for m in before.values()) == [0.0, 1.0]
+    # the crash: batch 1 reached the sink, its checkpoint commit did not
+    commits = os.path.join(sink_dir, "_ckpt", "commits")
+    for f in glob.glob(f"{commits}/1") + glob.glob(f"{commits}/.1.crc"):
+        os.remove(f)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    if fold:
+        spark.conf.set(key, str(S.live_file_count(sink_dir)))
+    try:
+        run()
+    finally:
+        spark.conf.set(key, old)
+
+    new = {
+        c: m for c, m in _log_manifests(sink_dir).items() if c not in before
+    }
+    data = [m for m in new.values() if "replaces" not in m]
+    assert [m["version"] for m in data] == [1.0], new
+    folds = [m for m in new.values() if "replaces" in m]
+    if fold:
+        (swallowed,) = [c for c, m in before.items() if m["version"] == 1.0]
+        assert len(folds) == 1 and swallowed in folds[0]["replaces"]
+    else:
+        assert folds == []
+    got = spark.table(view)
+    want = ref(spark, sf_dir).select(*got.columns)
+    assert {tuple(r) for r in got.collect()} == {
+        tuple(r) for r in want.collect()
+    }
+    assert got.count() > 0
+
+
 def _staged_event_files(spark, e, out_dir, frames):
     """Write each frame as one parquet file in `out_dir` with strictly
     increasing mtimes: FileStreamSource consumes files in
